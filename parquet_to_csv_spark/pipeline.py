@@ -8,16 +8,21 @@ off → hard error.
 
 Here the whole thing is ONE declarative plan: mergeSchema scan (S1-S3),
 project+filter (P1-P4, pushed down by Catalyst), dropDuplicates (D1,
-the only shuffle), uuid projection (P6), parallel CSV write / batched
-SQLite load. No JSON chunk caches (S7-S9) — a pushdown-pruned re-scan
-is cheaper, and Spark task commits are already atomic.
+the only shuffle), then the sinks. With both sinks on, the transformed
+relation is persisted once and the two sinks run at the same time: the
+parallel CSV writes on the calling thread, the streamed SQLite load
+(uuid projection, P6) on a second one. No JSON chunk caches (S7-S9) — a
+pushdown-pruned re-scan is cheaper, Spark task commits are already
+atomic, and the SQLite load is one transaction.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import Future
 from dataclasses import dataclass, field
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from parquet_to_csv_spark.functions.trace import MAX_DURATION_MS, MIN_DURATION_MS
@@ -118,19 +123,43 @@ def convert(
         cooked = cooked.persist()
     try:
         result: dict[str, object] = {}
-        if cfg.write_csv:
-            result["csv"] = write_csv_splits(
-                cooked, output_dir, long_threshold_ms=cfg.max_duration_ms
-            )
+        db_path = os.path.join(output_dir, "database.db")
         if cfg.write_sqlite:
             # the CSV path mkdirs implicitly through Spark's committer; a
             # SQLite-only run must create the output dir itself
             # (sqlite3.connect does not create parent directories)
             os.makedirs(output_dir, exist_ok=True)
-            db_path = os.path.join(output_dir, "database.db")
-            # UID is added inside the sink (P6), like the reference (main.js:342).
-            result["sqlite_rows"] = write_sqlite(cooked, db_path)
             result["sqlite_path"] = db_path
+        # UID is added inside the SQLite sink (P6), like the reference (main.js:342).
+        if not cfg.write_csv:
+            result["sqlite_rows"] = write_sqlite(cooked, db_path)
+        elif not cfg.write_sqlite:
+            result["csv"] = write_csv_splits(
+                cooked, output_dir, long_threshold_ms=cfg.max_duration_ms
+            )
+        else:
+            # Both sinks at once: the SQLite load is driver-side Python and
+            # sqlite3 (which releases the GIL while inserting), the CSV
+            # writes are executor work. Spark's block locks keep the
+            # persisted relation from being computed twice, and an
+            # InheritableThread carries the job description and group over.
+            loaded: Future = Future()
+
+            def load() -> None:
+                try:
+                    loaded.set_result(write_sqlite(cooked, db_path))
+                except BaseException as e:
+                    loaded.set_exception(e)
+
+            loader = InheritableThread(target=load)
+            loader.start()
+            try:
+                result["csv"] = write_csv_splits(
+                    cooked, output_dir, long_threshold_ms=cfg.max_duration_ms
+                )
+            finally:
+                loader.join()
+            result["sqlite_rows"] = loaded.result()
         return result
     finally:
         if fan_out:

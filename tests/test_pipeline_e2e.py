@@ -5,12 +5,18 @@ from __future__ import annotations
 import csv
 import glob
 import os
+import re
 import sqlite3
+import threading
+import time
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from parquet_to_csv_spark import pipeline
 from parquet_to_csv_spark.pipeline import ConvertConfig, convert
+from parquet_to_csv_spark.sinks.sqlite_sink import write_sqlite
 from parquet_to_csv_spark.functions.trace import trace_spans
 from parquet_to_csv_spark.sources.tables import load_table
 from parquet_to_csv_spark.sources.parquet import read_parquet_tree
@@ -54,6 +60,109 @@ def test_convert_csv_and_sqlite(spark, span_tree, tmp_path):
     assert n == res["sqlite_rows"]
     assert con.execute("SELECT count(*) FROM trace WHERE duration_ms < 2000").fetchone()[0] == 0
     con.close()
+
+
+UUID4 = re.compile(r"^[0-9a-f]{8}-[0-9a-f]{4}-4[0-9a-f]{3}-[89ab][0-9a-f]{3}-[0-9a-f]{12}$")
+
+
+@pytest.fixture
+def persisted(spark, monkeypatch):
+    """Every DataFrame ``persist()``-ed while the test runs."""
+    seen = []
+    frame_cls = type(spark.range(1))  # the session's concrete DataFrame class
+    real = frame_cls.persist
+
+    def spy(self, *args, **kwargs):
+        seen.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "persist", spy)
+    return seen
+
+
+def test_convert_uid_is_unique_canonical_uuid4(spark, span_tree, tmp_path):
+    """UID comes from Spark's uuid() in the plan: one canonical,
+    lower-case, 36-character version-4 string per row, all distinct."""
+    res = convert(spark, span_tree, str(tmp_path / "out"), ConvertConfig(write_csv=True, write_sqlite=True))
+    con = sqlite3.connect(res["sqlite_path"])
+    uids = [r[0] for r in con.execute("SELECT UID FROM trace")]
+    con.close()
+    assert len(uids) == res["sqlite_rows"] > 0
+    assert len(set(uids)) == len(uids)
+    for u in uids:
+        assert UUID4.match(u), u
+
+
+def test_convert_sqlite_failure_raises_and_unpersists(spark, span_tree, tmp_path, monkeypatch, persisted):
+    def broken_load(df, db_path):
+        raise RuntimeError("sqlite load failed")
+
+    monkeypatch.setattr(pipeline, "write_sqlite", broken_load)
+    with pytest.raises(RuntimeError, match="sqlite load failed"):
+        convert(spark, span_tree, str(tmp_path / "out"), ConvertConfig(write_csv=True, write_sqlite=True))
+    assert persisted, "both sinks on must persist the shared relation"
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+
+
+def test_convert_csv_failure_raises_and_joins_loader(spark, span_tree, tmp_path, monkeypatch, persisted):
+    """The CSV error propagates only after the SQLite thread has finished
+    its load, and the persisted relation is released."""
+    loads = []
+    real_load = pipeline.write_sqlite
+
+    def slow_load(df, db_path):
+        loads.append(threading.current_thread())
+        time.sleep(0.5)
+        return real_load(df, db_path)
+
+    def broken_csv(df, out_dir, **kwargs):
+        raise RuntimeError("csv write failed")
+
+    monkeypatch.setattr(pipeline, "write_sqlite", slow_load)
+    monkeypatch.setattr(pipeline, "write_csv_splits", broken_csv)
+    out = tmp_path / "out"
+    with pytest.raises(RuntimeError, match="csv write failed"):
+        convert(spark, span_tree, str(out), ConvertConfig(write_csv=True, write_sqlite=True))
+    assert len(loads) == 1 and loads[0] is not threading.main_thread()
+    assert not loads[0].is_alive()
+    con = sqlite3.connect(str(out / "database.db"))
+    assert con.execute("SELECT count(*) FROM trace").fetchone()[0] > 0
+    con.close()
+    assert persisted and all(df.storageLevel == StorageLevel.NONE for df in persisted)
+
+
+@pytest.mark.parametrize("sinks", [dict(write_csv=True), dict(write_sqlite=True)])
+def test_convert_single_sink_runs_inline(spark, span_tree, tmp_path, monkeypatch, persisted, sinks):
+    def no_thread(*args, **kwargs):
+        raise AssertionError("a single sink must not start a thread")
+
+    monkeypatch.setattr(pipeline, "InheritableThread", no_thread)
+    res = convert(spark, span_tree, str(tmp_path / "out"), ConvertConfig(**sinks))
+    assert ("csv" in res) == bool(sinks.get("write_csv"))
+    assert ("sqlite_rows" in res) == bool(sinks.get("write_sqlite"))
+    assert not persisted
+
+
+def test_sqlite_rerun_failure_keeps_previous_table(spark, tmp_path):
+    """A load that fails mid-stream rolls back: the previous good table,
+    DROP included, survives untouched."""
+    db = str(tmp_path / "database.db")
+    good = spark.createDataFrame([(2500, "click"), (3100, "view")], "duration_ms long, event_type string")
+    assert write_sqlite(good, db) == 2
+    # 4 partitions of 12,500 rows: the first chunks are inserted before
+    # the third partition raises
+    failing = spark.range(0, 50_000, numPartitions=4).select(
+        F.col("id").alias("duration_ms"),
+        F.when(F.col("id") == 30_000, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id").cast("string"))
+        .alias("event_type"),
+    )
+    with pytest.raises(Exception, match="boom"):
+        write_sqlite(failing, db)
+    con = sqlite3.connect(db)
+    rows = sorted(con.execute("SELECT duration_ms, event_type FROM trace").fetchall())
+    con.close()
+    assert rows == [(2500, "click"), (3100, "view")]
 
 
 def test_convert_requires_a_sink(spark, span_tree, tmp_path):

@@ -74,8 +74,8 @@ def _hostile_layout(spark):
     """shuffle.partitions=3 + every load_table round-robin scrambled."""
     real = _tables.load_table
 
-    def scrambled(spark_, sf_dir_, name_):
-        return real(spark_, sf_dir_, name_).repartition(7)
+    def scrambled(spark_, sf_dir_, name_, **kw):
+        return real(spark_, sf_dir_, name_, **kw).repartition(7)
 
     patched = [
         mod
